@@ -176,8 +176,9 @@ _J_NUM, _J_DEN = 9, 10
 #: Default is SCALE-DEPENDENT (parameterized per the round rules, env
 #: overridable both ways): ON (1024) under any cluster master — every
 #: production deployment gets the bound without hand-configuration —
-#: and OFF under local[*] masters, where (a) the fixture headroom is
-#: probe-verified (max observed bucket at sf0.1 is 20 rows —
+#: and OFF under local[*] masters (local-cluster[...] is a cluster
+#: master), where (a) the fixture headroom is probe-verified (max
+#: observed bucket at sf0.1 is 20 rows —
 #: tools/lsh_bucket_stats_r17.json: recall melt 12×1 geometry; 7 for the
 #: registered 4×3, 9 for the prefix buckets — 51× under the threshold,
 #: so the salt NEVER fires locally and results are byte-identical
@@ -190,14 +191,21 @@ _J_NUM, _J_DEN = 9, 10
 #: single-task straggler.
 _LSH_SALT_ENV = "SPARK_GRAFT_LSH_SALT_THRESHOLD"
 _LSH_SALT_DEFAULT = 1024
+#: working columns of the salted self-join; a melt may not carry them
+_SALT_RESERVED = ("__bn", "__ns_hot", "__ns", "__salt")
 
 
 def _salt_threshold(df: DataFrame) -> int:
     env = os.environ.get(_LSH_SALT_ENV)
     if env is not None:
-        return int(env)
+        try:
+            return int(env)
+        except ValueError:
+            raise ValueError(f"{_LSH_SALT_ENV} must be an integer, got {env!r}") from None
     master = df.sparkSession.conf.get("spark.master", "") or ""
-    return 0 if master.startswith("local") else _LSH_SALT_DEFAULT
+    # local-cluster[...] runs separate executor JVMs: a cluster master
+    local = master.startswith("local") and not master.startswith("local-cluster")
+    return 0 if local else _LSH_SALT_DEFAULT
 
 
 def skew_bounded_self_pairs(
@@ -243,8 +251,12 @@ def skew_bounded_self_pairs(
     ``carry_b`` columns come from side b with a ``_b`` suffix (r17: the
     simhash pair verify needs both sides' hashes). Callers apply their
     own ``.distinct()`` (pairs can repeat ACROSS buckets, exactly as
-    with the plain self-join).
+    with the plain self-join). ``melt`` must not carry the salt's own
+    columns (``_SALT_RESERVED``).
     """
+    clash = [c for c in melt.columns if c.lower() in _SALT_RESERVED]
+    if clash:
+        raise ValueError(f"skew_bounded_self_pairs: melt column {clash[0]!r} is reserved for the salt")
     t = _salt_threshold(melt) if threshold is None else threshold
     if t <= 0:
         a, b = melt.alias("a"), melt.alias("b")

@@ -2,13 +2,20 @@
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
+import pytest
 from pyspark.sql import functions as F
 
 from bigdata_project_spark.operators.text_dedup import (
+    _LSH_SALT_DEFAULT,
+    _LSH_SALT_ENV,
+    _salt_threshold,
     query_dedup_exact,
     query_dedup_minhash_lsh,
     query_dedup_ngram_jaccard,
     query_dedup_simhash,
+    skew_bounded_self_pairs,
 )
 
 
@@ -484,3 +491,35 @@ def test_skew_bounded_self_pairs_hot_bucket(spark):
     assert got_b == want_b
     by_pair = {(a, b): (ca, cb) for a, b, ca, cb in want_b}
     assert by_pair[(0, 1)] == (10, 11)  # doc 0 carries c=10, doc 1 c=11
+
+
+def test_salt_threshold_by_master(monkeypatch, spark):
+    """The salt defaults off only under local[...] masters; local-cluster
+    runs separate executors and gets the cluster default."""
+
+    def under(master):
+        conf = SimpleNamespace(get=lambda key, default=None: master)
+        return SimpleNamespace(sparkSession=SimpleNamespace(conf=conf))
+
+    monkeypatch.delenv(_LSH_SALT_ENV, raising=False)
+    for master in ("local", "local[4]", "local[*]"):
+        assert _salt_threshold(under(master)) == 0, master
+    for master in ("local-cluster[2,1,1024]", "spark://host:7077", "yarn"):
+        assert _salt_threshold(under(master)) == _LSH_SALT_DEFAULT, master
+    assert _salt_threshold(spark.range(1)) == 0
+    monkeypatch.setenv(_LSH_SALT_ENV, "16")
+    assert _salt_threshold(under("local[4]")) == 16
+
+
+def test_salt_threshold_malformed_env(monkeypatch, spark):
+    monkeypatch.setenv(_LSH_SALT_ENV, "1k")
+    with pytest.raises(ValueError, match=_LSH_SALT_ENV):
+        _salt_threshold(spark.range(1))
+
+
+def test_skew_bounded_self_pairs_rejects_reserved_columns(spark):
+    for col in ("__bn", "__ns_hot", "__ns", "__salt"):
+        melt = spark.createDataFrame([(1, "s", 0)], f"doc_id long, sig string, {col} int")
+        for threshold in (0, 64):
+            with pytest.raises(ValueError, match=col):
+                skew_bounded_self_pairs(melt, ["sig"], carry=(col,), threshold=threshold)

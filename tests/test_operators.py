@@ -24,6 +24,19 @@ def test_merge_keyed_incoming_wins(spark):
     assert got == {1: "new", 2: "keep", 3: "ins"}
 
 
+def test_merge_keyed_null_keys(spark):
+    """NULL keys never match in the anti-join: every old NULL-key row
+    survives, next to the one row the batch's NULL keys dedup to (the
+    first by the residual column order)."""
+    schema = "k int, v string"
+    old = spark.createDataFrame([(None, "old1"), (None, "old2"), (1, "x")], schema)
+    new = spark.createDataFrame([(None, "new2"), (None, "new1"), (1, "y")], schema)
+    got = sorted(
+        (r["k"] is None, r["v"]) for r in merge_keyed(old, new, ["k"]).collect()
+    )
+    assert got == [(False, "y"), (True, "new1"), (True, "old1"), (True, "old2")]
+
+
 def test_merge_keyed_map_column_deterministic(spark):
     """Duplicate-key rows differing only in a MAP column resolve to the
     row whose canonical (key-sorted JSON) serialization sorts first —
